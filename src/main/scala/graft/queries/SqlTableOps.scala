@@ -424,8 +424,9 @@ object SqlTableOps {
 
   /** SQL UPDATE — Delta's third DML statement beside DELETE and MERGE:
     * `UPDATE … SET value = value * 2 WHERE user_id BETWEEN 3 AND 7`,
-    * executed as the band rewrite (readWhere + Catalyst SET expressions +
-    * overwriteWhere) so only band-touching files are rewritten. Earns
+    * executed like every UPDATE ([[graft.tables.TxTable.updateWhere]]):
+    * the band's stats prune the candidates, and only band-touching files
+    * are rewritten, under one conditional Catalyst projection. Earns
     * q_table_replace's oracle: the same restatement computed by DuckDB
     * set logic. */
   def q_sql_table_update(spark: SparkSession, dir: String): DataFrame = {

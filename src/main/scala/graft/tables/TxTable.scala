@@ -469,9 +469,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
     // A file with no recorded stats for this column (appended by a writer
     // declared before a stats evolution) cannot be pruned soundly — scan it.
-    val keep = s.files.filter { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
+    val keep = s.files.filter(bandsIntersect(Map(p -> (lo, hi))))
     val df =
       if (keep.isEmpty) read(spark).filter(lit(false))
       else readFiles(spark, keep, s.colMap, s.meta)
@@ -623,17 +621,8 @@ final class TxTable(val root: String, val statCols: Seq[String],
   private[graft] def overwriteTagged(spark: SparkSession, df: DataFrame,
       txns: Map[String, Long]): Int = {
     val entries = writeDataFiles(spark, df)
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try return commitOnce(base, txns, op = "mview-refresh",
-        meta = declareFirstWrite(base, df)) { _ => entries }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1 // overwrite declares the whole table: rebase, retry
-      }
-    }
-    -1 // unreachable
+    commitWithRetry(maxRetries = 10, op = "mview-refresh",
+      meta = declareFirstWrite(snapshot(), df), txns = txns) { _ => entries }
   }
 
   /** Copy-on-write MERGE (upsert): rows of `source` replace same-`key`
@@ -650,7 +639,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * done right.
     *
     * Concurrency: a lost commit race runs FILE-LEVEL conflict detection
-    * ([[commitCow]]) — a concurrent commit that neither touched the
+    * ([[commitCowGuarded]]) — a concurrent commit that neither touched the
     * files this merge read nor added rows inside the source's key range
     * is provably disjoint, so the merge rebases onto it and republishes
     * (concurrent appends carry forward by name); a conflicting commit
@@ -859,10 +848,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
       if (envs.exists(_.isEmpty)) None
       else {
         val bands = envs.flatten
-        Some(((f: FileEntry) => bands.forall { case (pk, mn, mx) =>
-          f.mins.get(pk).forall(_ <= mx) && f.maxs.get(pk).forall(_ >= mn)
-        }, bands.map { case (pk, mn, mx) => s"overlap $pk in [$mn, $mx]" }
-          .mkString(" and ")))
+        Some((bandsIntersect(bands.map { case (pk, mn, mx) => pk -> (mn, mx) }.toMap) _,
+          bands.map { case (pk, mn, mx) => s"overlap $pk in [$mn, $mx]" }
+            .mkString(" and ")))
       }
     }
   }
@@ -870,11 +858,6 @@ final class TxTable(val root: String, val statCols: Seq[String],
   private[graft] def mergeFrom(spark: SparkSession, base: Snapshot,
       source: DataFrame, keys: Seq[String],
       txns: Map[String, Long]): MergeResult = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(keys.distinct.length == keys.length,
-      s"merge keys repeat a column: ${keys.mkString(", ")}")
-    keys.foreach(phys(base, _)) // every component must resolve
-    require(base.version > 0, "merge into an empty table: use append")
     // SCHEMA EVOLUTION: on tables with declared metadata, new source
     // columns (and lossless widenings) re-declare the schema in the SAME
     // commit — so a later partial read (CDF align, candidate subsets)
@@ -886,18 +869,14 @@ final class TxTable(val root: String, val statCols: Seq[String],
       evolveForSource(base, m.schema, source.schema))
     // A key WITHOUT declared stats (any column, any type — not just the
     // long-typed stat set) degrades with the predicate-DML discipline:
-    // no interval is derivable, so EVERY file is a rewrite candidate and
-    // the commit guard treats every concurrently added file as a
-    // conflict (nothing proves it key-disjoint). Correct first, pruned
-    // when the table's layout allows it — not a refusal.
-    val (candidates, kept) = multiKeyHitPaths(spark, base, source, keys) match {
-      case None => (base.files, Seq.empty[FileEntry])
-      case Some(hits) => base.files.partition(f => hits.contains(f.path))
-    }
+    // every file is a rewrite candidate, every concurrently added file a
+    // conflict. Correct first, pruned when the layout allows it.
+    val c = classify(spark, base, Selection.MergeKeys(source, keys), metadataDrops = false)
+    val candidates = c.candidates
     val src = source
     val existing =
       if (candidates.isEmpty) None
-      else Some(readFiles(spark, candidates, base.colMap)) // DV-aware: never resurrect
+      else Some(readFiles(spark, candidates, base.colMap, base.meta)) // DV-aware: never resurrect
     // matched rows take the source version; unmatched candidate rows pass
     // through; source keys absent everywhere are inserts. The anti joins
     // broadcast the (batch-sized) source — the 100 TB merge never
@@ -915,17 +894,10 @@ final class TxTable(val root: String, val statCols: Seq[String],
         notMatched.unionByName(src, allowMissingColumns = true)
     }
     val entries = writeDataFiles(spark, rewritten)
-    // conflict guard = the source's per-component key envelopes: every
-    // source key lies inside them, so a concurrent file proven outside
-    // ANY component's envelope could not have changed this merge's
-    // candidate selection or match results. An empty source guards
-    // nothing (its rewrite is content-preserving); a key with no stat
-    // component has no sound envelope — every fresh file conflicts.
-    val guard = multiKeyGuard(spark, base, src, keys)
-    val version = commitCowGuarded(base, candidates, entries, "merge", guard,
+    val version = commitCowGuarded(base, candidates, entries, "merge", c.guard(),
       txns = txns, meta = evolvedMeta)
     MergeResult(version, rewrittenFiles = candidates.size,
-      keptFiles = kept.size, newFiles = entries.size)
+      keptFiles = c.kept.size, newFiles = entries.size)
   }
 
   /** STREAMING UPSERT — the exactly-once micro-batch face of [[merge]]:
@@ -1018,46 +990,15 @@ final class TxTable(val root: String, val statCols: Seq[String],
       sourceKeyDistinct: Boolean): MergeResult = {
     import TxTable.{MergeDelete, MergeInsert, MergeUpdate}
     val base = snapshot()
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(keys.distinct.length == keys.length,
-      s"merge keys repeat a column: ${keys.mkString(", ")}")
-    keys.foreach(phys(base, _)) // every component must resolve
-    require(base.version > 0, "merge into an empty table: use append")
     require(matched.nonEmpty || notMatched.nonEmpty || bySource.nonEmpty,
       "MERGE with no clauses")
     val src = source
-    // WHEN NOT MATCHED BY SOURCE governs rows the source does NOT name —
-    // no key probe can prune by ABSENCE — but each clause's own
-    // condition can: a file provably disjoint from a clause condition's
-    // stat-column bands ([[predicateBands]] under the `t` alias) holds
-    // no row that clause could fire on (band pruning is sound under
-    // residual conjuncts). A clause with no derivable band forces every
-    // file. Returns None = all files, Some(test) = banded membership.
-    val bySourceTest: Option[Option[FileEntry => Boolean]] =
-      if (bySource.isEmpty) None
-      else Some {
-        val perClause = bySource.map {
-          case MergeUpdate(c, _) => c
-          case MergeDelete(c) => c
-        }.map {
-          case None => None // unconditional clause: every file
-          case Some(cond) =>
-            val (bands, _) = predicateBands(spark, cond, base, Some("t"))
-            if (bands.isEmpty) None else Some(bands)
-        }
-        if (perClause.exists(_.isEmpty)) None
-        else Some((f: FileEntry) =>
-          perClause.flatten.exists(b => bandsIntersect(b)(f)))
-      }
-    val (candidates, kept) =
-      if (bySourceTest.contains(None)) (base.files, Seq.empty[FileEntry])
-      else multiKeyHitPaths(spark, base, src, keys) match {
-        case None => (base.files, Seq.empty[FileEntry])
-        case Some(hitPaths) =>
-          // candidate = key-probe hit OR inside some BY SOURCE clause band
-          val bandHit = bySourceTest.flatten.getOrElse((_: FileEntry) => false)
-          base.files.partition(f => hitPaths.contains(f.path) || bandHit(f))
-      }
+    // BY SOURCE clauses prune by their conditions' bands (the classifier)
+    val c = classify(spark, base, Selection.MergeKeys(src, keys, bySource.map {
+      case MergeUpdate(cond, _) => cond
+      case MergeDelete(cond) => cond
+    }), metadataDrops = false)
+    val candidates = c.candidates
     val exOpt0: Option[DataFrame] =
       if (candidates.isEmpty) None
       else Some(readFiles(spark, candidates, base.colMap, base.meta))
@@ -1222,32 +1163,10 @@ final class TxTable(val root: String, val statCols: Seq[String],
       case (a, b) => a.orElse(b)
     }
     val entries = rewritten.map(writeDataFiles(spark, _)).getOrElse(Nil)
-    val keyGuard = multiKeyGuard(spark, base, src, keys)
-    val guard: Option[(FileEntry => Boolean, String)] =
-      if (bySource.nonEmpty) {
-        // a concurrently appended row this merge never saw is NOT
-        // MATCHED BY SOURCE: it conflicts when some clause band admits
-        // it (or always, when a clause has no derivable band / the key
-        // carries no stats — the source-key envelope is folded in for
-        // the matched/insert clauses)
-        bySourceTest.flatten match {
-          case Some(bandHit) =>
-            // keyGuard None = the source can match nothing (empty, or a
-            // component all-NULL): only the clause bands conflict
-            val keyHit = keyGuard.map(_._1).getOrElse((_: FileEntry) => false)
-            Some(((f: FileEntry) => keyHit(f) || bandHit(f),
-              "overlaps the merge key envelope or a NOT MATCHED BY " +
-                "SOURCE clause band"))
-          case None =>
-            Some(((_: FileEntry) => true,
-              "was added concurrently (NOT MATCHED BY SOURCE clauses " +
-                "govern every target row)"))
-        }
-      } else keyGuard
-    val version = commitCowGuarded(base, candidates, entries, "merge", guard,
+    val version = commitCowGuarded(base, candidates, entries, "merge", c.guard(),
       txns = txns, meta = evolvedMeta)
     MergeResult(version, rewrittenFiles = candidates.size,
-      keptFiles = kept.size, newFiles = entries.size)
+      keptFiles = c.kept.size, newFiles = entries.size)
   }
 
   // -------------------------------------------------------- change data feed
@@ -1472,7 +1391,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * rewrites nothing), their content exceptAll'd, net inserts landed
     * alongside; ONE commit publishes rows + watermark together —
     * readers of the replica see consistent cuts only. Lost races
-    * rebase/abort via [[commitCow]] with the changed-key envelope as
+    * rebase/abort via [[commitCowGuarded]] with the changed-key envelope as
     * the guard. At 100 TB a sync costs the CHANGED files on the source
     * side and the OVERLAPPING files on the target side, never either
     * table. Returns the source version now applied through. */
@@ -1538,8 +1457,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
         } else if (head.isNullAt(2)) None
         else {
           val (mn, mx) = (head.getLong(2), head.getLong(3))
-          Some(((f: FileEntry) => f.mins.get(pk).forall(_ <= mx) &&
-            f.maxs.get(pk).forall(_ >= mn), s"overlap $pk in [$mn, $mx]"))
+          Some((bandsIntersect(Map(pk -> (mn, mx))) _, s"overlap $pk in [$mn, $mx]"))
         }
       val (candidates, survivorsOpt) =
         if (nDel == 0L) {
@@ -1551,30 +1469,16 @@ final class TxTable(val root: String, val statCols: Seq[String],
           val delNet = del.exceptAll(ins).persist()
           persisted += insNet += delNet
           // candidate files = stats intervals admitting any net-deleted key
-          // (merge's broadcast probe); non-stat key ⇒ every file
+          // (the key-frame probe); non-stat key ⇒ every file
           val cands =
             if (!keyHasStats) base.files
-            else {
-              val (statless, statful) =
-                base.files.partition(f => f.mins.get(pk).isEmpty)
-              val delKeys = delNet.select(col(key).cast("long").as("__k")).distinct()
-              val hitPaths: Set[String] = {
-                import spark.implicits._
-                val intervals = statful.map(f => (f.path, f.mins(pk), f.maxs(pk)))
-                  .toDF("__path", "__mn", "__mx")
-                delKeys.join(broadcast(intervals),
-                    col("__k") >= col("__mn") && col("__k") <= col("__mx"))
-                  .select("__path").distinct().as[String].collect().toSet ++
-                  statless.map(_.path)
-              }
-              base.files.filter(f => hitPaths.contains(f.path))
-            }
+            else inListCandidates(spark, base, pk, delNet.select(col(key).as("__k")))._1
           val survivors =
             if (cands.isEmpty) insNet
             else {
               // align pre-evolution target files to the feed's schema
               // (absent columns read NULL, rowChangesBetween's own rule)
-              val cand = readFiles(spark, cands, base.colMap)
+              val cand = readFiles(spark, cands, base.colMap, base.meta)
               cand.select(dataCols.map(c =>
                   if (cand.columns.contains(c)) col(c) else lit(null).as(c)): _*)
                 .exceptAll(delNet)
@@ -1622,56 +1526,368 @@ final class TxTable(val root: String, val statCols: Seq[String],
     srcV
   }
 
-  /** Copy-on-write DELETE of rows with `lo <= statCol <= hi`. The
-    * manifest stats split the file list three ways, and only one class
-    * costs a data read:
-    *  - DISJOINT files ([min,max] ∩ [lo,hi] = ∅): carried BY NAME —
-    *    stats prove no row matches;
-    *  - FULLY-COVERED files (lo ≤ min and max ≤ hi): DROPPED from the
-    *    new manifest without reading a byte — the metadata-only delete
-    *    (at 100 TB, retention deletes of whole time ranges are THIS
-    *    path: truncating a month costs zero data I/O);
-    *  - STRADDLING files: rewritten without the matching rows (each
-    *    keeps at least its min- or max-valued row, so rewrites are
-    *    never empty).
-    * Exact min/max make the classification sound both ways: a dropped
-    * file cannot hold a survivor, a kept file cannot hold a victim.
-    * Historical snapshots still read the dropped/rewritten files until
-    * [[vacuum]]; a lost commit race rebases across provably disjoint
-    * concurrent commits and aborts on real conflicts ([[commitCow]]). */
+  // ------------------------------------------------------------ row-level DML
+
+  /* Every row-level statement — DELETE, UPDATE, MERGE, REPLACE WHERE, in
+   * their copy-on-write and deletion-vector forms — runs ONE pipeline:
+   *
+   *  1. CLASSIFY ([[classify]]): the base snapshot's files split, for a
+   *     [[TxTable.Selection]], into COVERED (stats prove every row is
+   *     selected: dropped metadata-only — DELETE and REPLACE WHERE only),
+   *     STRADDLING (may hold selected rows: rewritten or vectored) and
+   *     KEPT (stats prove no row is selected: carried by name), plus the
+   *     fresh-file conflict guard and the prune-class label;
+   *  2. WRITE: copy-on-write ([[writeDataFiles]]) or deletion vectors
+   *     ([[writeDvEntries]]);
+   *  3. COMMIT ([[commitCowGuarded]]).
+   *
+   * EXPLAIN's [[dryRun]] is step 1 alone, so a preview can never drift
+   * from the statement it previews. Public entry points are one-line
+   * delegations; the `*From(base, …)` seams pass an explicit base so a
+   * spec can interleave a competing commit between read and publish. */
+
+  private val HitCol = "__hit"
+
+  /** The one classifier. `metadataDrops` admits the covered class, which
+    * only a predicate with no residual conjunct can earn (the stats range
+    * inside every band AND zero NULLs — [[TxTable.FileEntry.provablyAllIn]]);
+    * key frames and merge keys have gaps between keys, so no file is ever
+    * provably covered by them. Missing stats never prune and never cover. */
+  private def classify(spark: SparkSession, base: Snapshot, sel: Selection,
+      metadataDrops: Boolean): Classified = sel match {
+    case Selection.Where(pred) =>
+      val (bands, residual) = predicateBands(spark, pred, base)
+      val (touched, kept) = base.files.partition(bandsIntersect(bands))
+      val (covered, straddling) =
+        if (!metadataDrops || residual || bands.isEmpty) (Nil, touched)
+        else touched.partition(f =>
+          bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
+      Classified(covered, straddling, kept,
+        pruneClass =
+          if (bands.isEmpty) "none:no-stat-conjunct"
+          else bands.toSeq.sortBy(_._1).map { case (p, (lo, hi)) =>
+            s"band:$p[$lo,$hi]"
+          }.mkString("+") + (if (residual) "+residual" else ""),
+        // a concurrent file this predicate's bands admit may hold rows
+        // it selects; with no band EVERY fresh file conflicts
+        guard = () => Some((bandsIntersect(bands) _,
+          s"may hold rows matching `$pred`")),
+        hit = df => df.withColumn(HitCol, coalesce(expr(pred), lit(false))))
+
+    case Selection.InKeys(column, keys, negate) =>
+      val p = phys(base, column)
+      val k = keys.toDF("__k") // one name, never colliding with the table's
+      // one job answers everything: key count, NULL presence, envelope
+      val head = k.agg(count(lit(1)), sum(when(col("__k").isNull, 1L).otherwise(0L)),
+        min(col("__k").cast("long")), max(col("__k").cast("long"))).head()
+      val nKeys = head.getLong(0)
+      val nullKey = nKeys > 0L && head.getLong(1) > 0L
+      // `c IN (empty)` is never TRUE; `c NOT IN (…, NULL)` is never TRUE
+      if ((!negate && nKeys == 0L) || (negate && nullKey))
+        Classified(Nil, Nil, base.files, "none:selects-nothing", () => None,
+          noop = true)
+      else {
+        // absence is unprunable: NOT IN makes every file a candidate
+        val keyHasStats = statCols.contains(p) && !negate
+        val (cands, kept) =
+          if (!keyHasStats) (base.files, Nil) else inListCandidates(spark, base, p, k)
+        Classified(Nil, cands, kept,
+          pruneClass =
+            if (keyHasStats) s"key-interval:$p" else "none:no-stat-key",
+          guard = () =>
+            // keys that exist but none casts to long prove nothing either
+            if (!keyHasStats || head.isNullAt(2))
+              Some(((_: FileEntry) => true,
+                s"was added concurrently ($column membership is unprovable " +
+                  "for the new file)"))
+            else {
+              val (mn, mx) = (head.getLong(2), head.getLong(3))
+              Some((bandsIntersect(Map(p -> (mn, mx))) _, s"overlap $p in [$mn, $mx]"))
+            },
+          // membership is a left join against the DISTINCT key frame (no
+          // forced broadcast — a subquery result can be arbitrarily large;
+          // AQE size-gates the strategy). NULL `column` rows are never
+          // members; NOT IN over zero keys is TRUE for every row, NULL
+          // included (the quantified comparison over the empty set)
+          hit = df => {
+            val j = df.join(k, df(column) === k("__k"), "left")
+            val member =
+              if (!negate) col("__k").isNotNull
+              else if (nKeys == 0L) lit(true)
+              else df(column).isNotNull && col("__k").isNull
+            j.select(df.columns.toSeq.map(c => df(c)) :+ member.as(HitCol): _*)
+          })
+      }
+
+    case Selection.MergeKeys(source, keys, bySource) =>
+      require(keys.nonEmpty, "merge needs at least one key column")
+      require(keys.distinct.length == keys.length,
+        s"merge keys repeat a column: ${keys.mkString(", ")}")
+      keys.foreach(phys(base, _)) // every component must resolve
+      require(base.version > 0, "merge into an empty table: use append")
+      // WHEN NOT MATCHED BY SOURCE governs rows the source does NOT name —
+      // no key probe prunes by ABSENCE — but each clause's condition can:
+      // a file provably disjoint from its stat-column bands (under the `t`
+      // alias) holds no row the clause could fire on. A clause with no
+      // derivable band (or no condition) forces every file.
+      val clauseBands = bySource.map(_.flatMap { cond =>
+        Some(predicateBands(spark, cond, base, Some("t"))._1).filter(_.nonEmpty)
+      })
+      val unbanded = clauseBands.exists(_.isEmpty)
+      val bandHit = (f: FileEntry) => clauseBands.flatten.exists(b => bandsIntersect(b)(f))
+      // a key WITHOUT declared stats degrades with the predicate-DML
+      // discipline: every file is a candidate, every fresh file conflicts
+      val statKeys = keys.filter(k => statCols.contains(phys(base, k)))
+      val hits = if (unbanded) None else multiKeyHitPaths(spark, base, source, keys)
+      val (cands, kept) = hits match {
+        case None => (base.files, Nil)
+        // candidate = key-probe hit OR inside some BY SOURCE clause band
+        case Some(h) => base.files.partition(f => h.contains(f.path) || bandHit(f))
+      }
+      Classified(Nil, cands, kept,
+        pruneClass =
+          if (unbanded) "none:not-matched-by-source"
+          else if (statKeys.isEmpty) "none:no-stat-key-component"
+          else s"interval-intersect:${statKeys.mkString(",")}" +
+            (if (bySource.nonEmpty) "+by-source-band" else ""),
+        // the source's per-component key envelopes: a concurrent file
+        // outside ANY component's envelope could not have changed the
+        // candidates or the matches. A concurrently appended row this
+        // merge never saw is also NOT MATCHED BY SOURCE: it conflicts when
+        // some clause band admits it
+        guard = () =>
+          if (unbanded)
+            Some(((_: FileEntry) => true, "was added concurrently (NOT " +
+              "MATCHED BY SOURCE clauses govern every target row)"))
+          else {
+            val keyGuard = multiKeyGuard(spark, base, source, keys)
+            if (bySource.isEmpty) keyGuard
+            else {
+              // keyGuard None = the source can match nothing (empty, or a
+              // component all-NULL): only the clause bands conflict
+              val keyHit = keyGuard.map(_._1).getOrElse((_: FileEntry) => false)
+              Some(((f: FileEntry) => keyHit(f) || bandHit(f),
+                "overlaps the merge key envelope or a NOT MATCHED BY " +
+                  "SOURCE clause band"))
+            }
+          })
+  }
+
+  /** A stat-column band `lo <= statCol <= hi` as a selection — the
+    * predicate form, so it classifies exactly as the same WHERE does. */
+  private def band(base: Snapshot, statCol: String, lo: Long, hi: Long): Selection = {
+    val p = phys(base, statCol)
+    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
+    Selection.Where(s"`$statCol` BETWEEN ${lo}L AND ${hi}L")
+  }
+
+  /** DV-aware read of the straddling files with the selection's hit tag
+    * (copy-on-write input). */
+  private def tagged(spark: SparkSession, base: Snapshot, c: Classified): DataFrame =
+    c.hit(readFiles(spark, c.straddling, base.colMap, base.meta))
+
+  /** The selected rows of the straddling files with their `__file`/`__pos`
+    * positions (deletion-vector input). */
+  private def selectedPositions(spark: SparkSession, base: Snapshot,
+      c: Classified): DataFrame =
+    c.hit(readWithPositions(spark, c.straddling, base)).filter(col(HitCol)).drop(HitCol)
+
+  /** The one DELETE body. Covered files drop metadata-only — at 100 TB a
+    * retention delete of whole time ranges costs zero data I/O; kept
+    * files carry by name; straddlers lose their selected rows, either
+    * REWRITTEN without them (copy-on-write; an all-victims rewrite set
+    * legitimately yields zero files) or, `positional`, with their victim
+    * ROW POSITIONS recorded in per-file deletion vectors (merge-on-read:
+    * a k-row delete costs one victim scan plus O(k) positions, never a
+    * rewrite; existing vectors union forward, victims re-entering a
+    * vector are idempotent). Reads are DV-aware, so already-deleted rows
+    * never resurrect. `extra` entries (a REPLACE WHERE's validated
+    * replacement) ride the same commit. Returns (version, classification,
+    * written entries). */
+  private def deleteRows(spark: SparkSession, base: Snapshot, sel: Selection,
+      positional: Boolean, op: String,
+      extra: Seq[FileEntry] = Nil): (Int, Classified, Seq[FileEntry]) = {
+    require(base.version > 0, "delete from an empty table?")
+    val c = classify(spark, base, sel, metadataDrops = true)
+    if (c.noop) return (base.version, c, Nil)
+    val entries =
+      if (c.straddling.isEmpty) Nil
+      else if (positional)
+        writeDvEntries(spark, c.straddling, selectedPositions(spark, base, c)
+          .select(col("__file").as("file"), col("__pos").as("pos")))
+      else writeDataFiles(spark,
+        tagged(spark, base, c).filter(!col(HitCol)).drop(HitCol))
+    (commitCowGuarded(base, c.candidates, entries ++ extra, op, c.guard()), c, entries)
+  }
+
+  /** The one UPDATE body: every candidate is a rewrite (an update must
+    * rewrite matching ROWS, so no file drops metadata-only). Copy-on-write
+    * passes each candidate's rows through ONE conditional projection —
+    * `WHEN selected THEN rhs ELSE old` per assigned column, every rhs
+    * reading the PRE-update row (ANSI UPDATE: `SET a = b, b = a` swaps);
+    * unselected rows carry unchanged. `positional` (Delta's DV-based
+    * UPDATE) instead TOMBSTONES the selected rows by position and appends
+    * their updated IMAGES — zero candidate files rewritten; rows already
+    * tombstoned never re-image (that would resurrect them). */
+  private def updateRows(spark: SparkSession, base: Snapshot, sel: Selection,
+      sets: Seq[(String, String)],
+      positional: Boolean): (Int, Classified, Seq[FileEntry]) = {
+    require(base.version > 0, "update of an empty table?")
+    val names = sets.map(_._1)
+    require(names.distinct.length == names.length,
+      s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
+    val c = classify(spark, base, sel, metadataDrops = false)
+    if (c.noop) return (base.version, c, Nil)
+    val setMap = sets.toMap
+    def known(cols: Seq[String]): Unit = names.foreach(n => require(cols.contains(n),
+      s"UPDATE SET names unknown column $n (have ${cols.mkString(", ")})"))
+    val touched = c.straddling
+    val entries =
+      if (touched.isEmpty) Nil
+      else if (!positional) {
+        val cand = tagged(spark, base, c)
+        val cols = cand.columns.toSeq.filterNot(_ == HitCol)
+        known(cols)
+        writeDataFiles(spark, cand.select(cols.map { n =>
+          setMap.get(n)
+            .map(rhs => when(col(HitCol), expr(rhs)).otherwise(col(n)).as(n))
+            .getOrElse(col(n))
+        }: _*))
+      } else {
+        val selected = selectedPositions(spark, base, c)
+        val dataCols = selected.columns.toSeq.filterNot(n => n == "__file" || n == "__pos")
+        known(dataCols)
+        val oldDvs = touched.flatMap(_.dv).distinct
+        val alive =
+          if (oldDvs.isEmpty) selected
+          else {
+            val dvs = spark.read.parquet(oldDvs.map(d => dataDir.resolve(d).toString): _*)
+            selected.join(dvs,
+              selected("__file") === dvs("file") && selected("__pos") === dvs("pos"),
+              "left_anti")
+          }
+        val alivePersisted = alive.persist()
+        try {
+          val dvEntries = writeDvEntries(spark, touched,
+            alivePersisted.select(col("__file").as("file"), col("__pos").as("pos")))
+          val images = alivePersisted.select(dataCols.map { n =>
+            setMap.get(n).map(rhs => expr(rhs).as(n)).getOrElse(col(n))
+          }: _*)
+          dvEntries ++ writeDataFiles(spark, images)
+        } finally { alivePersisted.unpersist(blocking = false); () }
+      }
+    (commitCowGuarded(base, touched, entries, "update", c.guard()), c, entries)
+  }
+
+  /** A key frame for [[TxTable.Selection.InKeys]]: the caller's
+    * materialized subquery, DISTINCT and cached for the classification
+    * probe, the candidate probe and the rewrite join. */
+  private def withKeyFrame[R](keys: DataFrame)(body: DataFrame => R): R = {
+    require(keys.schema.length == 1,
+      s"IN-subquery must project exactly one column, got ${keys.schema.length}")
+    val k = keys.toDF("__k").distinct().persist()
+    try body(k) finally { k.unpersist(blocking = false); () }
+  }
+
+  private def deleteResult(r: (Int, Classified, Seq[FileEntry])): DeleteResult = {
+    val (v, c, entries) = r
+    DeleteResult(v, droppedFiles = c.covered.size, rewrittenFiles = c.straddling.size,
+      keptFiles = c.kept.size, newFiles = entries.size)
+  }
+
+  private def positionalResult(r: (Int, Classified, Seq[FileEntry])): PositionalDeleteResult = {
+    val (v, c, _) = r
+    PositionalDeleteResult(v, droppedFiles = c.covered.size,
+      dvFiles = c.straddling.size, keptFiles = c.kept.size)
+  }
+
+  /** Copy-on-write DELETE of rows with `lo <= statCol <= hi` (a band
+    * predicate through the pipeline: covered files drop metadata-only,
+    * straddlers rewrite, disjoint files carry by name). Historical
+    * snapshots still read the dropped/rewritten files until [[vacuum]]. */
   def delete(spark: SparkSession, statCol: String, lo: Long, hi: Long): DeleteResult =
     deleteFrom(spark, snapshot(), statCol, lo, hi)
 
-  /** Delete against an explicit base snapshot — the seam that lets a spec
-    * interleave a competing commit between base-read and publish
-    * (mergeFrom precedent). */
+  /** [[delete]] against an explicit base snapshot. */
   private[graft] def deleteFrom(spark: SparkSession, base: Snapshot,
-      statCol: String, lo: Long, hi: Long): DeleteResult = {
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
-    require(base.version > 0, "delete from an empty table?")
-    // Missing stats (a narrow-writer append after a stats evolution):
-    // the file MAY hold victims (touched) but can never be proven fully
-    // covered — it lands in the rewrite class, which is always sound.
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    val entries =
-      if (straddling.isEmpty) Nil
-      else writeDataFiles(spark,
-        readFiles(spark, straddling, base.colMap) // DV-aware: never resurrect
-          // NULL statCol rows are NOT in the band: coalesce keeps them
-          // (bare NOT(NULL) is NULL and the filter would drop survivors)
-          .filter(!coalesce(col(statCol) >= lo && col(statCol) <= hi, lit(false))))
-    // rebase across disjoint concurrent commits; a concurrent file
-    // overlapping [lo, hi] would hold victims this delete never saw
-    val version = commitCow(base, touched, entries, "delete",
-      Some((p, lo, hi)))
-    DeleteResult(version, droppedFiles = covered.size,
-      rewrittenFiles = straddling.size, keptFiles = kept.size,
-      newFiles = entries.size)
+      statCol: String, lo: Long, hi: Long): DeleteResult =
+    deleteResult(deleteRows(spark, base, band(base, statCol, lo, hi),
+      positional = false, "delete"))
+
+  /** Copy-on-write DELETE of rows matching an ARBITRARY predicate: files
+    * provably disjoint from some conjunct interval carry by name, files
+    * provably fully covered drop metadata-only, the rest rewrite without
+    * the rows where the predicate is TRUE (NULL survives). A
+    * non-stat-column predicate degrades soundly: every file is a
+    * candidate and every concurrent append conflicts. */
+  def deleteWhere(spark: SparkSession, predicateSql: String): DeleteResult =
+    deleteResult(deleteRows(spark, snapshot(), Selection.Where(predicateSql),
+      positional = false, "delete"))
+
+  /** Copy-on-write DELETE of rows whose `column` value appears in (IN) —
+    * or, `negate`, does NOT appear in (NOT IN) — a KEY FRAME: the
+    * execution of `DELETE FROM t WHERE c [NOT] IN (SELECT …)`, the
+    * subquery materialized ONCE by the caller. Candidates come from the
+    * per-key broadcast stats-interval probe MERGE uses (never one global
+    * envelope a single outlier key would inflate). ANSI semantics: NULL
+    * `column` rows survive IN; `NOT IN` over a key set holding a NULL is
+    * never TRUE, so it deletes nothing (a zero result, no commit). */
+  def deleteWhereIn(spark: SparkSession, column: String, keys: DataFrame,
+      negate: Boolean = false): DeleteResult =
+    withKeyFrame(keys)(k => deleteResult(deleteRows(spark, snapshot(),
+      Selection.InKeys(column, k, negate), positional = false, "delete")))
+
+  /** Copy-on-write UPDATE of rows whose `column` appears (IN) — or,
+    * `negate`, does NOT appear (NOT IN) — in a KEY FRAME: `UPDATE t SET …
+    * WHERE c [NOT] IN (SELECT …)`, the "flag these users" shape.
+    * Candidates, ANSI NULL semantics and the commit guard are
+    * [[deleteWhereIn]]'s. */
+  def updateWhereIn(spark: SparkSession, column: String, keys: DataFrame,
+      sets: Seq[(String, String)], negate: Boolean = false): DeleteResult =
+    withKeyFrame(keys)(k => deleteResult(updateRows(spark, snapshot(),
+      Selection.InKeys(column, k, negate), sets, positional = false)))
+
+  /** Copy-on-write UPDATE under an ARBITRARY predicate — the candidates
+    * [[deleteWhere]] would read, every one rewritten. */
+  def updateWhere(spark: SparkSession, predicateSql: String,
+      sets: Seq[(String, String)]): DeleteResult =
+    updateWhereFrom(spark, snapshot(), predicateSql, sets)
+
+  /** [[updateWhere]] against an explicit base snapshot. */
+  private[graft] def updateWhereFrom(spark: SparkSession, base: Snapshot,
+      predicateSql: String, sets: Seq[(String, String)]): DeleteResult =
+    deleteResult(updateRows(spark, base, Selection.Where(predicateSql), sets,
+      positional = false))
+
+  /** POSITIONAL delete (merge-on-read — Delta deletion vectors / Iceberg
+    * positional deletes) of `lo <= statCol <= hi`: [[delete]]'s classes,
+    * but straddlers keep their bytes and gain deletion vectors. The
+    * read-side anti-join is paid only by DV'd files, and only until
+    * [[compact]] or [[materializeDeletes]] folds the vectors in. */
+  def deletePositional(spark: SparkSession, statCol: String,
+      lo: Long, hi: Long): PositionalDeleteResult = {
+    val base = snapshot()
+    positionalResult(deleteRows(spark, base, band(base, statCol, lo, hi),
+      positional = true, "positional delete"))
   }
+
+  /** POSITIONAL delete under an ARBITRARY predicate — [[deleteWhere]]'s
+    * classes with [[deletePositional]]'s write path (the GDPR shape: a
+    * small scattered victim set, where rewriting every touched file would
+    * turn a k-row delete into a compaction). */
+  def deletePositionalWhere(spark: SparkSession,
+      predicateSql: String): PositionalDeleteResult =
+    positionalResult(deleteRows(spark, snapshot(), Selection.Where(predicateSql),
+      positional = true, "positional delete"))
+
+  /** MERGE-ON-READ UPDATE (Delta's DV-based UPDATE): selected rows are
+    * tombstoned by position and their updated images appended — one
+    * commit, zero candidate files rewritten; compaction or
+    * [[materializeDeletes]] later folds the debt flat. */
+  def updatePositionalWhere(spark: SparkSession, predicateSql: String,
+      sets: Seq[(String, String)]): PositionalDeleteResult =
+    positionalResult(updateRows(spark, snapshot(), Selection.Where(predicateSql),
+      sets, positional = true))
 
   /** Per-STAT-COLUMN interval constraints implied by the TOP-LEVEL
     * conjuncts of an arbitrary predicate, plus whether any conjunct was
@@ -1770,204 +1986,6 @@ final class TxTable(val root: String, val statCols: Seq[String],
       f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
     }
 
-  /** Copy-on-write DELETE of rows matching an ARBITRARY predicate — the
-    * general form of the banded [[delete]] (round-10 verdict #2).
-    * Manifest stats prune the file list through the predicate's conjunct
-    * intervals ([[predicateBands]]):
-    *  - files PROVABLY DISJOINT from some interval carry by name;
-    *  - files PROVABLY FULLY COVERED (no residual conjunct and stats
-    *    range inside every interval) drop metadata-only — zero data I/O;
-    *  - the rest rewrite without the matching rows (DV-aware read, so
-    *    already-deleted rows never resurrect; rows where the predicate
-    *    evaluates NULL survive — ANSI DELETE removes only TRUE).
-    * A non-stat-column predicate degrades soundly: no interval is
-    * derivable, every file is a rewrite candidate, and the commit guard
-    * treats every concurrent append as a conflict. At 100 TB the cost is
-    * the files the predicate's selectivity on the table's clustered
-    * columns leaves touched — retention deletes stay metadata-only. */
-  def deleteWhere(spark: SparkSession, predicateSql: String): DeleteResult = {
-    val base = snapshot()
-    require(base.version > 0, "delete from an empty table?")
-    val (bands, residual) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val (covered, straddling) =
-      if (residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
-      else touched.partition(f =>
-        bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
-    val entries =
-      if (straddling.isEmpty) Nil
-      else {
-        val survivors = readFiles(spark, straddling, base.colMap, base.meta)
-          .filter(!coalesce(expr(predicateSql), lit(false)))
-        // an all-victims rewrite set legitimately produces ZERO files
-        if (survivors.isEmpty) Nil else writeDataFiles(spark, survivors)
-      }
-    val version = commitCowGuarded(base, touched, entries, "delete",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    DeleteResult(version, droppedFiles = covered.size,
-      rewrittenFiles = straddling.size, keptFiles = kept.size,
-      newFiles = entries.size)
-  }
-
-  /** DRY-RUN manifest classification of a canonical MERGE (r14 verdict
-    * #6): the EXACT candidate split [[mergeFrom]] would compute — the
-    * same [[multiKeyHitPaths]] probe — with ZERO writes and ZERO
-    * commits, so an operator can preview what an upsert will rewrite on
-    * a 100 TB table before running it. One source-scan job (the probe),
-    * nothing else. */
-  def dryRunMerge(spark: SparkSession, source: DataFrame,
-      keys: Seq[String]): TxTable.DmlDryRun = {
-    val base = snapshot()
-    keys.foreach(phys(base, _))
-    val (candidates, kept) = multiKeyHitPaths(spark, base, source, keys) match {
-      case None => (base.files, Seq.empty[FileEntry])
-      case Some(hits) => base.files.partition(f => hits.contains(f.path))
-    }
-    val statKeys = keys.filter(k => statCols.contains(phys(base, k)))
-    // a merge rewrites every candidate (CoW) — no metadata-only class
-    TxTable.DmlDryRun("merge", base.files.size, candidates.size,
-      covered = 0, straddling = candidates.size, kept = kept.size,
-      pruneClass =
-        if (statKeys.isEmpty) "none:no-stat-key-component"
-        else s"interval-intersect:${statKeys.mkString(",")}")
-  }
-
-  /** DRY-RUN classification of a banded UPDATE/DELETE — [[deleteFrom]]'s
-    * exact partition (touched by [min,max] overlap, covered by
-    * provably-all-in), committed never. */
-  def dryRunBand(operation: String, statCol: String, lo: Long,
-      hi: Long): TxTable.DmlDryRun = {
-    val base = snapshot()
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    TxTable.DmlDryRun(operation, base.files.size, touched.size,
-      covered.size, straddling.size, kept.size, s"band:$statCol[$lo,$hi]")
-  }
-
-  /** DRY-RUN classification of a predicate UPDATE/DELETE —
-    * [[deleteWhere]]'s exact partition through [[predicateBands]]
-    * (residual conjuncts disqualify the covered class, exactly as the
-    * real run refuses metadata-only drops it cannot prove). */
-  def dryRunWhere(spark: SparkSession, operation: String,
-      predicateSql: String): TxTable.DmlDryRun = {
-    val base = snapshot()
-    val (bands, residual) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val (covered, straddling) =
-      if (residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
-      else touched.partition(f =>
-        bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
-    val cls =
-      if (bands.isEmpty) "none:no-stat-conjunct"
-      else bands.toSeq.sortBy(_._1).map { case (p, (lo, hi)) =>
-        s"band:$p[$lo,$hi]"
-      }.mkString("+") + (if (residual) "+residual" else "")
-    TxTable.DmlDryRun(operation, base.files.size, touched.size,
-      covered.size, straddling.size, kept.size, cls)
-  }
-
-  /** Copy-on-write DELETE of rows whose `column` value appears in (IN) —
-    * or, `negate`, does NOT appear in (NOT IN) — a KEY FRAME: the
-    * execution of `DELETE FROM t WHERE c IN (SELECT …)`. The subquery is
-    * materialized ONCE by the caller; this method never re-runs it.
-    *
-    * IN semantics (ANSI: delete only where the predicate is TRUE):
-    * NULL `column` rows survive (NULL IN anything is never TRUE), and
-    * candidate files come from the SAME broadcast stats-interval probe
-    * MERGE uses — each distinct key joined against the manifest
-    * intervals, so a 100 TB table rewrites only the files whose range
-    * admits some key, never the table, and never one global envelope a
-    * single outlier key would inflate. No file ever drops metadata-only
-    * (a key set has gaps; only a scan can prove full coverage).
-    * Survivors are the anti-join of candidate content against the keys —
-    * the keys frame is (subquery-result)-sized and broadcasts.
-    *
-    * NOT IN semantics: `c NOT IN (keys)` is TRUE only when `c` is
-    * non-NULL, the key set holds NO NULL, and nothing matches — so a
-    * NULL in the subquery result makes the statement a LOUD no-op
-    * (committed as metadata so the intent is auditable would be noise —
-    * we return a zero result instead), and survivors are the NULL-`c`
-    * rows plus the semi-join matches. Absence is unprunable: every file
-    * is a candidate and every concurrent append conflicts.
-    *
-    * Commit guard: the keys' [min,max] envelope for IN (a concurrent
-    * file provably outside it holds no deletable row); the
-    * always-conflict guard for NOT IN. */
-  def deleteWhereIn(spark: SparkSession, column: String, keys: DataFrame,
-      negate: Boolean = false): DeleteResult = {
-    val base = snapshot()
-    require(base.version > 0, "delete from an empty table?")
-    val p = phys(base, column)
-    require(keys.schema.length == 1,
-      s"IN-subquery must project exactly one column, got ${keys.schema.length}")
-    val k = keys.toDF("__k").persist()
-    try {
-      // one job answers everything: count, null presence, long envelope
-      val head = k.agg(count(lit(1)), sum(when(col("__k").isNull, 1L).otherwise(0L)),
-        min(col("__k").cast("long")), max(col("__k").cast("long"))).head()
-      val nKeys = head.getLong(0)
-      val nNullKeys = if (nKeys == 0) 0L else head.getLong(1)
-      if (!negate && nKeys == 0L)
-        return DeleteResult(base.version, 0, 0, base.files.size, 0)
-      if (negate && nNullKeys > 0L)
-        // `c NOT IN (…, NULL)` is never TRUE: ANSI says delete nothing
-        return DeleteResult(base.version, 0, 0, base.files.size, 0)
-      val keyHasStats = statCols.contains(p) && !negate
-      val (candidates, kept) =
-        if (!keyHasStats) (base.files, Seq.empty[FileEntry])
-        else inListCandidates(spark, base, p, k)
-      val entries =
-        if (candidates.isEmpty) Nil
-        else {
-          val cand = readFiles(spark, candidates, base.colMap, base.meta)
-          // no forced broadcast on the key frame: a subquery result can
-          // be arbitrarily large (a forced build side is the OOM class
-          // round 12 removed) — AQE size-gates the strategy instead
-          val survivors =
-            if (!negate) // NULL c and unmatched rows survive the anti-join
-              cand.join(k, cand(column) === k("__k"), "left_anti")
-            else if (nKeys == 0L)
-              // `c NOT IN (empty)` is TRUE for EVERY row, NULL c
-              // included (the quantified comparison over zero elements
-              // — ANSI and Spark agree): nothing survives
-              cand.filter(lit(false))
-            else // survivors: NULL c, or c matching some key
-              cand.filter(col(column).isNull)
-                .unionByName(cand.join(k,
-                  cand(column) === k("__k"), "left_semi"))
-          if (survivors.isEmpty) Nil else writeDataFiles(spark, survivors)
-        }
-      val guard: Option[(FileEntry => Boolean, String)] =
-        if (negate)
-          Some(((_: FileEntry) => true,
-            s"was added concurrently (NOT IN governs every row of $column)"))
-        else if (head.isNullAt(2) && keyHasStats)
-          // keys exist but none casts to long: the interval probe saw
-          // nothing, but equality on a non-numeric stat column is
-          // unprovable — conservative all-conflict
-          Some(((_: FileEntry) => true, "was added concurrently (IN keys " +
-            s"carry no $p interval — nothing proves disjointness)"))
-        else if (!keyHasStats)
-          Some(((_: FileEntry) => true,
-            s"was added concurrently (delete key $column has no stats " +
-              "interval — nothing proves disjointness)"))
-        else {
-          val (mn, mx) = (head.getLong(2), head.getLong(3))
-          Some(((f: FileEntry) => f.mins.get(p).forall(_ <= mx) &&
-            f.maxs.get(p).forall(_ >= mn), s"overlap $p in [$mn, $mx]"))
-        }
-      val version = commitCowGuarded(base, candidates, entries, "delete", guard)
-      DeleteResult(version, droppedFiles = 0,
-        rewrittenFiles = candidates.size, keptFiles = kept.size,
-        newFiles = entries.size)
-    } finally { k.unpersist(blocking = false); () }
-  }
-
   /** Candidate files for a key-FRAME membership probe: each distinct key
     * joined against the broadcast manifest intervals (merge's
     * discipline — per-key, never one global envelope), statless files
@@ -1988,113 +2006,17 @@ final class TxTable(val root: String, val statCols: Seq[String],
     base.files.partition(f => hitPaths.contains(f.path))
   }
 
-  /** Copy-on-write UPDATE of rows whose `column` appears (IN) — or,
-    * `negate`, does NOT appear (NOT IN) — in a KEY FRAME: the execution
-    * of `UPDATE t SET … WHERE c [NOT] IN (SELECT …)`, the "flag these
-    * users" erasure/backfill shape. Candidates, ANSI NULL semantics and
-    * the commit guard are [[deleteWhereIn]]'s; matched rows pass through
-    * ONE conditional projection (`WHEN member THEN rhs ELSE old`, every
-    * rhs reading the PRE-update row — ANSI SET), unmatched and
-    * NULL-`column` rows carry byte-identical, and `NOT IN` with a NULL
-    * key updates nothing (never TRUE). Membership is a left join against
-    * the DISTINCT key frame (no forced broadcast — AQE size-gates). */
-  def updateWhereIn(spark: SparkSession, column: String, keys: DataFrame,
-      sets: Seq[(String, String)], negate: Boolean = false): DeleteResult = {
+  /** DRY RUN of a row-level statement: the pipeline's classification
+    * step — the very call the real statement makes — with no write and
+    * no commit, so an operator can preview what a statement will drop,
+    * rewrite and keep on a 100 TB table before running it. "delete"
+    * keeps the metadata-only covered class; "update" and "merge" rewrite
+    * every candidate. A merge costs its one source-scan probe job. */
+  def dryRun(spark: SparkSession, operation: String, sel: Selection): TxTable.DmlDryRun = {
     val base = snapshot()
-    require(base.version > 0, "update of an empty table?")
-    val p = phys(base, column)
-    require(keys.schema.length == 1,
-      s"IN-subquery must project exactly one column, got ${keys.schema.length}")
-    val names = sets.map(_._1)
-    require(names.distinct.length == names.length,
-      s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
-    val k = keys.toDF("__k").distinct().persist()
-    try {
-      val head = k.agg(count(lit(1)),
-        sum(when(col("__k").isNull, 1L).otherwise(0L)),
-        min(col("__k").cast("long")), max(col("__k").cast("long"))).head()
-      val nKeys = head.getLong(0)
-      val nNullKeys = if (nKeys == 0) 0L else head.getLong(1)
-      if (!negate && nKeys == 0L)
-        return DeleteResult(base.version, 0, 0, base.files.size, 0)
-      if (negate && nNullKeys > 0L)
-        return DeleteResult(base.version, 0, 0, base.files.size, 0)
-      val keyHasStats = statCols.contains(p) && !negate
-      val (candidates, kept) =
-        if (!keyHasStats) (base.files, Seq.empty[FileEntry])
-        else inListCandidates(spark, base, p, k)
-      val entries =
-        if (candidates.isEmpty) Nil
-        else {
-          val cand = readFiles(spark, candidates, base.colMap, base.meta)
-          names.foreach(n => require(cand.columns.contains(n),
-            s"UPDATE SET names unknown column $n (have ${cand.columns.mkString(", ")})"))
-          val joined = cand.join(k, cand(column) === k("__k"), "left")
-          val member =
-            if (!negate) col("__k").isNotNull
-            else if (nKeys == 0L) lit(true) // NOT IN (empty) is always TRUE
-            else cand(column).isNotNull && col("__k").isNull
-          val setMap = sets.toMap
-          val updated = joined.select(cand.columns.toSeq.map { c =>
-            setMap.get(c)
-              .map(rhs => when(member, expr(rhs)).otherwise(cand(c)).as(c))
-              .getOrElse(cand(c))
-          }: _*)
-          writeDataFiles(spark, updated)
-        }
-      val guard: Option[(FileEntry => Boolean, String)] =
-        if (negate || !keyHasStats || head.isNullAt(2))
-          Some(((_: FileEntry) => true,
-            s"was added concurrently ($column membership is unprovable " +
-              "for the new file)"))
-        else {
-          val (mn, mx) = (head.getLong(2), head.getLong(3))
-          Some(((f: FileEntry) => f.mins.get(p).forall(_ <= mx) &&
-            f.maxs.get(p).forall(_ >= mn), s"overlap $p in [$mn, $mx]"))
-        }
-      val version = commitCowGuarded(base, candidates, entries, "update", guard)
-      DeleteResult(version, droppedFiles = 0,
-        rewrittenFiles = candidates.size, keptFiles = kept.size,
-        newFiles = entries.size)
-    } finally { k.unpersist(blocking = false); () }
-  }
-
-  /** Copy-on-write UPDATE under an ARBITRARY predicate: [[deleteWhere]]'s
-    * prune classes minus the metadata-only one (an update must rewrite
-    * matching ROWS, so provably-fully-covered files are rewrites too).
-    * Each candidate file's rows pass through ONE conditional projection —
-    * `WHEN pred THEN rhs ELSE old` per assigned column, every rhs reading
-    * the PRE-update row (ANSI UPDATE: `SET a = b, b = a` swaps); rows the
-    * predicate doesn't match (including NULL) carry unchanged. */
-  def updateWhere(spark: SparkSession, predicateSql: String,
-      sets: Seq[(String, String)]): DeleteResult = {
-    val base = snapshot()
-    require(base.version > 0, "update of an empty table?")
-    val names = sets.map(_._1)
-    require(names.distinct.length == names.length,
-      s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
-    val (bands, _) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val entries =
-      if (touched.isEmpty) Nil
-      else {
-        val cand = readFiles(spark, touched, base.colMap, base.meta)
-        names.foreach(n => require(cand.columns.contains(n),
-          s"UPDATE SET names unknown column $n (have ${cand.columns.mkString(", ")})"))
-        val setMap = sets.toMap
-        val pred = coalesce(expr(predicateSql), lit(false))
-        val updated = cand.select(cand.columns.toSeq.map { c =>
-          setMap.get(c)
-            .map(rhs => when(pred, expr(rhs)).otherwise(col(c)).as(c))
-            .getOrElse(col(c))
-        }: _*)
-        writeDataFiles(spark, updated)
-      }
-    val version = commitCowGuarded(base, touched, entries, "update",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    DeleteResult(version, droppedFiles = 0, rewrittenFiles = touched.size,
-      keptFiles = kept.size, newFiles = entries.size)
+    val c = classify(spark, base, sel, metadataDrops = operation == "delete")
+    TxTable.DmlDryRun(operation, base.files.size, c.candidates.size,
+      c.covered.size, c.straddling.size, c.kept.size, c.pruneClass)
   }
 
   /** Unconditional `DELETE FROM t` (truncate): every current file leaves
@@ -2102,21 +2024,13 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * table size, and history/time travel keep the old versions readable
     * (vacuum reclaims the bytes later). Declared metadata, constraints
     * and stream watermarks survive: a truncated table is EMPTY, not
-    * destroyed. */
+    * destroyed. A lost race retries against the new latest. */
   def truncateAll(): DeleteResult = {
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try {
-        val v = commitOnce(base, op = "delete") { _ => Nil }
-        return DeleteResult(v, droppedFiles = base.files.size,
-          rewrittenFiles = 0, keptFiles = 0, newFiles = 0)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1 // truncate commutes with nothing; rebase and retry
-      }
+    var dropped = 0
+    val v = commitWithRetry(maxRetries = 10, op = "delete") { base =>
+      dropped = base.files.size; Nil
     }
-    throw new IllegalStateException("unreachable")
+    DeleteResult(v, droppedFiles = dropped, rewrittenFiles = 0, keptFiles = 0, newFiles = 0)
   }
 
   /** Atomic band overwrite (Delta's `replaceWhere`) — the
@@ -2131,21 +2045,18 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * scan: a backfill that leaks rows outside [lo, hi] would silently
     * clobber or duplicate data it never declared ownership of, so it
     * refuses before anything becomes visible (staged files deleted, the
-    * Delta replaceWhere contract). Victim classification is
-    * [[delete]]'s: covered files drop metadata-only, straddlers rewrite
-    * minus the band, disjoint files carry by name. Lost commit races
-    * rebase across provably disjoint concurrent commits ([[commitCow]]
-    * with the [lo, hi] guard). `newFiles` counts replacement +
-    * straddler-rewrite files. */
+    * Delta replaceWhere contract). The band itself is a DELETE through
+    * the pipeline whose commit carries the replacement. `newFiles`
+    * counts replacement + straddler-rewrite files. */
   def overwriteWhere(spark: SparkSession, statCol: String, lo: Long, hi: Long,
       df: DataFrame): DeleteResult =
     overwriteWhereFrom(spark, snapshot(), statCol, lo, hi, df)
 
   private[graft] def overwriteWhereFrom(spark: SparkSession, base: Snapshot,
       statCol: String, lo: Long, hi: Long, df: DataFrame): DeleteResult = {
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
+    val sel = band(base, statCol, lo, hi)
     require(base.version > 0, "overwrite into an empty table: use append")
+    val p = phys(base, statCol)
     val replacement = writeDataFiles(spark, df)
     // provablyAllIn: range inside the band AND zero nulls — a NULL-keyed
     // replacement row lies outside every band and must be rejected too
@@ -2158,22 +2069,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
           escapees.map(e => s"${e.path} spans [${e.mins.get(p).orNull}, " +
             s"${e.maxs.get(p).orNull}]").mkString("(", "; ", ")"))
     }
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    val rewrites =
-      if (straddling.isEmpty) Nil
-      else writeDataFiles(spark,
-        readFiles(spark, straddling, base.colMap) // DV-aware: never resurrect
-          // NULL statCol rows are NOT in the band: coalesce keeps them
-          // (bare NOT(NULL) is NULL and the filter would drop survivors)
-          .filter(!coalesce(col(statCol) >= lo && col(statCol) <= hi, lit(false))))
-    val version = commitCow(base, touched, rewrites ++ replacement,
-      "overwriteWhere", Some((p, lo, hi)))
-    DeleteResult(version, droppedFiles = covered.size,
-      rewrittenFiles = straddling.size, keptFiles = kept.size,
-      newFiles = rewrites.size + replacement.size)
+    val r = deleteResult(deleteRows(spark, base, sel, positional = false,
+      "overwriteWhere", extra = replacement))
+    r.copy(newFiles = r.newFiles + replacement.size)
   }
 
   /** PER-FILE deletion-vector writer — the distributed replacement for
@@ -2243,148 +2141,6 @@ final class TxTable(val root: String, val statCols: Seq[String],
     }
   }
 
-  /** POSITIONAL delete (merge-on-read — Delta deletion vectors /
-    * Iceberg positional deletes): like [[delete]], manifest stats
-    * classify files three ways, but straddlers are NOT rewritten —
-    * their victim ROW POSITIONS land in one tiny deletion-vector file
-    * and readers anti-join them out ([[readFiles]]). The write
-    * amplification of copy-on-write disappears: a delete of k rows
-    * costs one victim scan plus O(k) positions, never a file rewrite —
-    * the shape row-level GDPR/retention deletes take at 100 TB, where
-    * rewriting every straddling file turns a small delete into a
-    * compaction. The read-side cost (per-file anti-join) is paid only
-    * by DV'd files and only until [[compact]] or
-    * [[materializeDeletes]] folds the vectors in. Victims are computed
-    * DV-aware (already-deleted rows just re-enter the vector —
-    * idempotent under the anti-join); existing vectors of touched
-    * files are unioned forward so nothing resurrects. Commit races
-    * rebase/abort via the same conflict detection as delete. */
-  def deletePositional(spark: SparkSession, statCol: String,
-      lo: Long, hi: Long): PositionalDeleteResult = {
-    val base = snapshot()
-    val p = phys(base, statCol)
-    require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
-    require(base.version > 0, "delete from an empty table?")
-    val (touched, kept) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
-    val (covered, straddling) = touched.partition(_.provablyAllIn(p, lo, hi))
-    val entries =
-      if (straddling.isEmpty) Nil
-      else {
-        val victims = readWithPositions(spark, straddling, base)
-          .filter(col(statCol) >= lo && col(statCol) <= hi) // logical names
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        writeDvEntries(spark, straddling, victims)
-      }
-    val version = commitCow(base, touched, entries, "positional delete",
-      Some((p, lo, hi)))
-    PositionalDeleteResult(version, droppedFiles = covered.size,
-      dvFiles = straddling.size, keptFiles = kept.size)
-  }
-
-  /** POSITIONAL delete under an ARBITRARY predicate — [[deleteWhere]]'s
-    * prune classes with [[deletePositional]]'s merge-on-read write path:
-    * provably-fully-covered files still drop METADATA-ONLY (cheaper than
-    * any vector), provably-disjoint files carry by name, and the
-    * candidates in between get their matching ROW POSITIONS appended to
-    * one tiny deletion-vector file instead of a copy-on-write rewrite —
-    * the GDPR/row-level-retention shape at 100 TB, where the victim set
-    * is small and scattered and rewriting every touched file would turn
-    * a k-row delete into a compaction. The predicate is evaluated under
-    * LOGICAL names (raw files carry physical names — the column mapping
-    * is applied before the filter); rows where it evaluates NULL
-    * survive. Existing vectors of touched files union forward; commit
-    * races use the multi-band fresh-file conflict guard. */
-  def deletePositionalWhere(spark: SparkSession,
-      predicateSql: String): PositionalDeleteResult = {
-    val base = snapshot()
-    require(base.version > 0, "delete from an empty table?")
-    val (bands, residual) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val (covered, straddling) =
-      if (residual || bands.isEmpty) (Seq.empty[FileEntry], touched)
-      else touched.partition(f =>
-        bands.forall { case (p, (lo, hi)) => f.provablyAllIn(p, lo, hi) })
-    val entries =
-      if (straddling.isEmpty) Nil
-      else {
-        val victims = readWithPositions(spark, straddling, base)
-          .filter(coalesce(expr(predicateSql), lit(false)))
-          .select(col("__file").as("file"), col("__pos").as("pos"))
-        writeDvEntries(spark, straddling, victims)
-      }
-    val version = commitCowGuarded(base, touched, entries, "positional delete",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    PositionalDeleteResult(version, droppedFiles = covered.size,
-      dvFiles = straddling.size, keptFiles = kept.size)
-  }
-
-  /** MERGE-ON-READ UPDATE (Delta's DV-based UPDATE): rows matching the
-    * predicate are TOMBSTONED by position in a deletion vector and their
-    * UPDATED IMAGES appended as new files — ONE commit, zero candidate
-    * files rewritten. Copy-on-write [[updateWhere]] re-copies every
-    * touched file's untouched rows; here a k-row update costs one
-    * victim scan + O(k) positions + O(k) new rows — the GDPR/backfill
-    * shape at 100 TB when the matched set is small and scattered. The
-    * read side needs nothing new: the DV anti-join hides the old
-    * images, the appended file carries the new ones. Already-DV'd rows
-    * are excluded from image generation (re-updating a deleted row
-    * would resurrect it as a fresh image); existing vectors union
-    * forward. SET semantics, NULL-predicate survival, and the banded
-    * candidate prune are [[updateWhere]]'s; compaction or
-    * [[materializeDeletes]] later folds the debt flat. */
-  def updatePositionalWhere(spark: SparkSession, predicateSql: String,
-      sets: Seq[(String, String)]): PositionalDeleteResult = {
-    val base = snapshot()
-    require(base.version > 0, "update of an empty table?")
-    val names = sets.map(_._1)
-    require(names.distinct.length == names.length,
-      s"UPDATE SET assigns ${names.diff(names.distinct).distinct.mkString(", ")} more than once")
-    val (bands, _) = predicateBands(spark, predicateSql, base)
-    val (touched, kept) = base.files.partition(bandsIntersect(bands))
-    val entries =
-      if (touched.isEmpty) Nil
-      else {
-        val raw = readWithPositions(spark, touched, base)
-        names.foreach(n => require(raw.columns.contains(n),
-          s"UPDATE SET names unknown column $n"))
-        val matching = raw.filter(coalesce(expr(predicateSql), lit(false)))
-        val oldDvs = touched.flatMap(_.dv).distinct
-        // rows already tombstoned must not re-image
-        val alive =
-          if (oldDvs.isEmpty) matching
-          else {
-            val dvs = spark.read.parquet(
-              oldDvs.map(d => dataDir.resolve(d).toString): _*)
-            matching.join(dvs,
-              matching("__file") === dvs("file") && matching("__pos") === dvs("pos"),
-              "left_anti")
-          }
-        val alivePersisted = alive.persist()
-        try {
-          val victims = alivePersisted
-            .select(col("__file").as("file"), col("__pos").as("pos"))
-          val dvEntries = writeDvEntries(spark, touched, victims)
-          // updated IMAGES of the tombstoned rows — one projection, every
-          // rhs reading the PRE-update row (ANSI SET)
-          val setMap = sets.toMap
-          val dataCols = raw.columns.toSeq.filterNot(c => c == "__file" || c == "__pos")
-          val images = alivePersisted.select(dataCols.map { c =>
-            setMap.get(c).map(rhs => expr(rhs).as(c)).getOrElse(col(c))
-          }: _*)
-          val imageEntries = writeDataFiles(spark, images)
-          dvEntries ++ imageEntries
-        } finally { alivePersisted.unpersist(blocking = false); () }
-      }
-    val version = commitCowGuarded(base, touched, entries, "update",
-      Some((bandsIntersect(bands) _,
-        s"may hold rows matching `$predicateSql`")))
-    PositionalDeleteResult(version, droppedFiles = 0,
-      dvFiles = touched.size, keptFiles = kept.size)
-  }
-
   /** MERGE-ON-READ upsert (DV-based MERGE — the Delta deletion-vector
     * merge / Iceberg MoR write path): matched target rows are
     * TOMBSTONED by position, the ENTIRE source appends as new files
@@ -2418,27 +2174,19 @@ final class TxTable(val root: String, val statCols: Seq[String],
   private[graft] def mergePositionalFrom(spark: SparkSession, base: Snapshot,
       source: DataFrame, keys: Seq[String],
       txns: Map[String, Long]): MergeResult = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    require(keys.distinct.length == keys.length,
-      s"merge keys repeat a column: ${keys.mkString(", ")}")
-    keys.foreach(phys(base, _)) // every component must resolve
-    require(base.version > 0, "merge into an empty table: use append")
     // same schema-evolution declaration as the copy-on-write twin: a
     // declared table's new source columns widen the schema in the same
     // commit (the appended batch carries them; tombstoned history
     // NULL-backfills), type conflicts refuse before any tombstone lands
     val evolvedMeta = base.meta.flatMap(m =>
       evolveForSource(base, m.schema, source.schema))
-    val src = source
-    val (candidates, kept) = multiKeyHitPaths(spark, base, src, keys) match {
-      case None => (base.files, Seq.empty[FileEntry])
-      case Some(hits) => base.files.partition(f => hits.contains(f.path))
-    }
+    val c = classify(spark, base, Selection.MergeKeys(source, keys), metadataDrops = false)
+    val candidates = c.candidates
     val dvEntries =
       if (candidates.isEmpty) Nil
       else {
         val raw = readWithPositions(spark, candidates, base)
-        val srcKeys = src.select(keys.zipWithIndex.map { case (k, i) =>
+        val srcKeys = source.select(keys.zipWithIndex.map { case (k, i) =>
           col(k).as(s"__mk$i") }: _*).distinct()
         val matched = raw.join(srcKeys,
           keys.indices.map(i => raw(keys(i)) === col(s"__mk$i")).reduce(_ && _),
@@ -2447,12 +2195,11 @@ final class TxTable(val root: String, val statCols: Seq[String],
           .select(col("__file").as("file"), col("__pos").as("pos"))
         writeDvEntries(spark, candidates, victims)
       }
-    val srcEntries = writeDataFiles(spark, src)
-    val guard = multiKeyGuard(spark, base, src, keys)
+    val srcEntries = writeDataFiles(spark, source)
     val version = commitCowGuarded(base, candidates,
-      dvEntries ++ srcEntries, "merge", guard, txns = txns, meta = evolvedMeta)
+      dvEntries ++ srcEntries, "merge", c.guard(), txns = txns, meta = evolvedMeta)
     MergeResult(version, rewrittenFiles = 0,
-      keptFiles = kept.size + candidates.size, newFiles = srcEntries.size)
+      keptFiles = c.kept.size + candidates.size, newFiles = srcEntries.size)
   }
 
   /** Fold every deletion vector back into plain files: rewrite ONLY the
@@ -2482,9 +2229,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
       }
     if (dvd.isEmpty)
       return MergeResult(base.version, 0, base.files.size, 0)
-    val entries = writeDataFiles(spark, readFiles(spark, dvd, base.colMap))
+    val entries = writeDataFiles(spark, readFiles(spark, dvd, base.colMap, base.meta))
     // content-preserving rewrite: concurrent appends never conflict
-    val version = commitCow(base, dvd, entries, "materializeDeletes", None)
+    val version = commitCowGuarded(base, dvd, entries, "materializeDeletes", None)
     MergeResult(version, rewrittenFiles = dvd.size,
       keptFiles = base.files.size - dvd.size, newFiles = entries.size)
   }
@@ -2548,11 +2295,12 @@ final class TxTable(val root: String, val statCols: Seq[String],
       f.rows < smallRows || dvHeavy.contains(f.path))
     if (small.size < 2 && dvHeavy.isEmpty)
       return MergeResult(base.version, 0, base.files.size, 0)
-    val packed = readFiles(spark, small, base.colMap) // DV-aware: compaction materializes deletes
+    // DV-aware: compaction materializes deletes
+    val packed = readFiles(spark, small, base.colMap, base.meta)
       .coalesce(math.max(1, (small.map(_.rows).sum / smallRows).toInt))
     val entries = writeDataFiles(spark, packed)
     // content-preserving rewrite: concurrent appends never conflict
-    val version = commitCow(base, small, entries, "compaction", None)
+    val version = commitCowGuarded(base, small, entries, "compaction", None)
     MergeResult(version, rewrittenFiles = small.size,
       keptFiles = large.size, newFiles = entries.size)
   }
@@ -2572,16 +2320,14 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val p = phys(base, statCol)
     require(statCols.contains(p), s"$statCol is not a stat column ($statCols)")
     require(base.version > 0, "compact an empty table?")
-    val (inBand, outside) = base.files.partition { f =>
-      f.maxs.get(p).forall(_ >= lo) && f.mins.get(p).forall(_ <= hi)
-    }
+    val (inBand, outside) = base.files.partition(bandsIntersect(Map(p -> (lo, hi))))
     val small = inBand.filter(_.rows < smallRows)
     if (small.size < 2)
       return MergeResult(base.version, 0, base.files.size, 0)
     val packed = readFiles(spark, small, base.colMap, base.meta)
       .coalesce(math.max(1, (small.map(_.rows).sum / smallRows).toInt))
     val entries = writeDataFiles(spark, packed)
-    val version = commitCow(base, small, entries, "compaction", None)
+    val version = commitCowGuarded(base, small, entries, "compaction", None)
     MergeResult(version, rewrittenFiles = small.size,
       keptFiles = outside.size + (inBand.size - small.size),
       newFiles = entries.size)
@@ -2691,7 +2437,7 @@ final class TxTable(val root: String, val statCols: Seq[String],
     val entries = writeDataFiles(spark, clustered)
     // full-table content-preserving rewrite: candidates = every base
     // file; a concurrent append rebases in by name, unclustered
-    val version = commitCow(base, base.files, entries, "z-order rewrite", None)
+    val version = commitCowGuarded(base, base.files, entries, "z-order rewrite", None)
     MergeResult(version, rewrittenFiles = base.files.size,
       keptFiles = 0, newFiles = entries.size)
   }
@@ -3077,8 +2823,8 @@ final class TxTable(val root: String, val statCols: Seq[String],
     }
     if (carriers.isEmpty)
       return MergeResult(base.version, 0, base.files.size, 0)
-    val entries = writeDataFiles(spark, readFiles(spark, carriers, base.colMap))
-    val v = commitCow(base, carriers, entries, "purge-dropped-columns", None)
+    val entries = writeDataFiles(spark, readFiles(spark, carriers, base.colMap, base.meta))
+    val v = commitCowGuarded(base, carriers, entries, "purge-dropped-columns", None)
     MergeResult(v, rewrittenFiles = carriers.size, keptFiles = clean.size,
       newFiles = entries.size)
   }
@@ -3558,7 +3304,9 @@ final class TxTable(val root: String, val statCols: Seq[String],
         broken.map { case (c, n) => s"CHECK ($c) violated by $n row(s)" }
           .mkString(s"write to $root rejected: ", "; ", ""))
     }
-    val bloomsByCol = computeBlooms(spark, stage.toString)
+    // a zero-row write (an all-victims rewrite) stages no file to hash
+    val bloomsByCol = if (stats.isEmpty) Map.empty[String, Map[String, Seq[Long]]]
+      else computeBlooms(spark, stage.toString)
     val entries = stats.map { case (uri, get) =>
       val staged = Paths.get(new java.net.URI(uri).getPath)
       val fresh = s"${UUID.randomUUID()}.parquet"
@@ -3704,26 +3452,20 @@ final class TxTable(val root: String, val statCols: Seq[String],
     * version still moves (ADVICE r14: without it the same change range
     * is re-read forever). Never conflicts: it reads nothing. */
   private[graft] def commitTxns(txns: Map[String, Long],
-      op: String = "txn"): Int = {
-    var attempt = 0
-    while (true) {
-      val base = snapshot()
-      try return commitOnce(base, txns, op = op)(_ => base.files)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException if attempt < 10 =>
-          attempt += 1
-      }
-    }
-    -1 // unreachable
-  }
+      op: String = "txn"): Int =
+    commitWithRetry(maxRetries = 10, op = op, txns = txns)(_.files)
 
+  /** Commit `next(latest)` on the latest snapshot, re-reading it after
+    * each lost publish race — for commits that read nothing a
+    * concurrent writer could invalidate (appends, whole-table
+    * replacements, metadata-only watermarks). */
   private def commitWithRetry(maxRetries: Int, op: String = "write",
-      meta: Option[TableMeta] = None)(
+      meta: Option[TableMeta] = None, txns: Map[String, Long] = Map.empty)(
       next: Snapshot => Seq[FileEntry]): Int = {
     var attempt = 0
     while (true) {
       val base = snapshot()
-      try return commitOnce(base, op = op, meta = meta)(next)
+      try return commitOnce(base, txns, op = op, meta = meta)(next)
       catch {
         case _: java.nio.file.FileAlreadyExistsException if attempt < maxRetries =>
           attempt += 1 // rebase onto the new latest and try again
@@ -3743,41 +3485,24 @@ final class TxTable(val root: String, val statCols: Seq[String],
     *  - a candidate's (path, dv) identity is gone — a concurrent
     *    rewrite/delete/DV touched a file this operation read, so its
     *    staged output was derived from content that no longer exists;
-    *  - `guard` is set and a concurrently ADDED file's [min,max] for
-    *    the guard column overlaps (or lacks stats for) the operation's
-    *    key range — those rows would have changed the operation's own
+    *  - `guard` is set and a concurrently ADDED file satisfies its test
+    *    — its stats cannot prove it disjoint from the rows the
+    *    operation governs (the classifier's guard: a predicate's bands,
+    *    a key frame's or a merge source's key envelope; missing stats
+    *    conflict). Those rows would have changed the operation's own
     *    candidate selection (a merge would have matched them, a delete
     *    would have victims there). Content-preserving rewrites
     *    (compact, z-order, DV materialization) pass None: concurrent
     *    appends never conflict with them;
     *  - the constraint set changed — the staged files were validated
-    *    against the old one.
+    *    against the old one; or the operation evolves the declared
+    *    schema and the declaration changed concurrently.
     *
     * Otherwise the kept set is recomputed from the LATEST file list
     * (concurrent appends carry forward by name, never dropped) and the
     * publish retries. At 100 TB this is what lets streaming ingest and
     * background maintenance share a table without livelocking each
     * other: an optimizer that aborts on every append never wins. */
-  private def commitCow(base: Snapshot, candidates: Seq[FileEntry],
-      entries: Seq[FileEntry], what: String,
-      guard: Option[(String, Long, Long)],
-      txns: Map[String, Long] = Map.empty): Int =
-    commitCowGuarded(base, candidates, entries, what,
-      guard.map { case (key, mn, mx) =>
-        ((f: FileEntry) => f.mins.get(key).forall(_ <= mx) &&
-          f.maxs.get(key).forall(_ >= mn),
-          s"overlap $key in [$mn, $mx]")
-      }, txns)
-
-  /** The copy-on-write commit loop under a GENERAL fresh-file conflict
-    * test: on a lost publish race, rebase across concurrent commits
-    * unless (a) a file this op read was rewritten/deleted, or (b) a
-    * concurrently ADDED file satisfies `freshConflict` — i.e. its stats
-    * cannot prove it disjoint from the rows this operation's predicate
-    * governs. The single-stat-band ops pass an interval test through the
-    * [[commitCow]] wrapper; arbitrary-predicate DML passes the
-    * multi-band test its prune derived ([[predicateBands]] — with no
-    * derivable band EVERY fresh data file conflicts, the sound default). */
   private def commitCowGuarded(base: Snapshot, candidates: Seq[FileEntry],
       entries: Seq[FileEntry], what: String,
       guard: Option[(FileEntry => Boolean, String)],
@@ -4012,6 +3737,37 @@ object TxTable {
   final case class DmlDryRun(operation: String, filesTotal: Int,
       candidates: Int, covered: Int, straddling: Int, kept: Int,
       pruneClass: String)
+
+  /** One classification: `covered ++ straddling` are the candidates the
+    * commit replaces. `guard` is lazy — a merge's key envelope costs a
+    * source job a dry run never needs. `hit` tags a candidate frame with
+    * the boolean `__hit` column: TRUE exactly for the selected rows (a NULL
+    * predicate selects nothing — ANSI DML acts only on TRUE). `noop`: the
+    * selection provably selects no row anywhere (IN over no keys, NOT IN
+    * over a NULL key) — nothing is written or committed. */
+  private final case class Classified(covered: Seq[FileEntry],
+      straddling: Seq[FileEntry], kept: Seq[FileEntry], pruneClass: String,
+      guard: () => Option[(FileEntry => Boolean, String)],
+      hit: DataFrame => DataFrame = identity, noop: Boolean = false) {
+    def candidates: Seq[FileEntry] = covered ++ straddling
+  }
+
+  /** The rows a row-level statement acts on — the input of the DML
+    * pipeline's classifier and of [[TxTable#dryRun]]. */
+  sealed trait Selection
+  object Selection {
+    /** Rows where `predicateSql` is TRUE; its stat-column conjuncts prune. */
+    final case class Where(predicateSql: String) extends Selection
+    /** Rows whose `column` is (`negate`: is NOT) IN the single-column
+      * key frame `keys` — a materialized subquery. */
+    final case class InKeys(column: String, keys: DataFrame,
+        negate: Boolean) extends Selection
+    /** Target rows an upsert of `source` on `keys` can match, plus those
+      * its WHEN NOT MATCHED BY SOURCE clauses govern (one entry per
+      * clause: its condition, None = unconditional). */
+    final case class MergeKeys(source: DataFrame, keys: Seq[String],
+        bySource: Seq[Option[String]] = Nil) extends Selection
+  }
 
   /** Whether `root` holds a TxTable transaction log (catalog existence
     * probe — side-effect-free, unlike the directory-creating constructor). */

@@ -38,11 +38,24 @@ class DeclaredSchemaSpec extends AnyFunSuite with SparkFixture {
     t.read(spark).count() // settle the session's first-use jobs
     val names = java.util.Collections.synchronizedList(
       new java.util.ArrayList[String]())
+    // the top frame of each job's call site: a footer-inference job is
+    // scheduled from inside a DataFrameReader call, a write from a
+    // DataFrameWriter one
+    val sites = java.util.Collections.synchronizedList(
+      new java.util.ArrayList[String]())
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        j.stageInfos.foreach(s => names.add(s.name)); ()
+        j.stageInfos.foreach(s => names.add(s.name))
+        j.stageInfos.headOption.foreach(s => sites.add(s.details.linesIterator
+          .toSeq.headOption.getOrElse(""))); ()
       }
+    }
+    def inferenceJobs(body: => Unit): Seq[String] = {
+      sites.clear()
+      body
+      Thread.sleep(500) // let the listener bus drain
+      sites.toArray(Array.empty[String]).toSeq.filter(_.contains("DataFrameReader"))
     }
     spark.sparkContext.addSparkListener(l)
     try {
@@ -56,6 +69,17 @@ class DeclaredSchemaSpec extends AnyFunSuite with SparkFixture {
       assert(snap.nonEmpty, "listener saw no jobs")
       assert(!snap.exists(_.startsWith("parquet at Tx")),
         s"declared read must plan from the manifest schema, saw: $snap")
+      // the maintenance and DML rewrites read their candidates under the
+      // declaration too: an OPTIMIZE and a MERGE schedule no inference
+      val packed = inferenceJobs {
+        assert(t.compact(spark, smallRows = 1000).rewrittenFiles == 4); ()
+      }
+      assert(packed.isEmpty, s"OPTIMIZE must read small files declared, saw: $packed")
+      val src = spark.range(10, 15).toDF("user_id").withColumn("v", lit(-1L))
+      val merged = inferenceJobs { t.merge(spark, src, "user_id"); () }
+      assert(merged.isEmpty, s"MERGE must read candidates declared, saw: $merged")
+      assert(t.read(spark).count() == 50)
+      assert(t.read(spark).filter(col("v") === -1L).count() == 5)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 

@@ -304,4 +304,22 @@ class PredicateDmlSpec extends AnyFunSuite with SparkFixture {
         s"copy-on-write and merge-on-read disagree on `${p.sql}`")
     }
   }
+
+  test("an all-victims rewrite commits zero new files (no emptiness probe needed)") {
+    // the residual conjunct (v is no stat column) keeps [0, 24]'s file
+    // out of the metadata-only class, yet every one of its rows is a
+    // victim: the rewrite writes nothing and the file just leaves
+    val (t, rows) = fresh(new scala.util.Random(7L))
+    val first = t.snapshot().files.minBy(_.mins("k"))
+    val hi = first.maxs("k")
+    val r = t.deleteWhere(spark, s"k <= $hi AND v >= 0")
+    assert(r.droppedFiles == 0 && r.rewrittenFiles == 1 && r.newFiles == 0, s"got $r")
+    assert(content(t) == rows.filter(_._1 > hi).toSet)
+    // the key-frame form: every key of the next file
+    val next = t.snapshot().files.minBy(_.mins("k"))
+    val keys = spark.range(next.mins("k"), next.maxs("k") + 1).toDF("id")
+    val r2 = t.deleteWhereIn(spark, "k", keys)
+    assert(r2.rewrittenFiles == 1 && r2.newFiles == 0, s"got $r2")
+    assert(content(t) == rows.filter(_._1 > next.maxs("k")).toSet)
+  }
 }

@@ -1047,15 +1047,17 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
     val rm = spark.sql(s"MERGE INTO ${q(t.root)} AS t $mergeTail").head()
     assert(dm.getInt(4) == rm.getInt(1) && dm.getInt(5) == rm.getInt(2),
       s"dry-run straddling/kept must equal the real rewrite/kept: $dm vs $rm")
-    // banded UPDATE: covered files are replaced wholesale (the real
-    // run's dropped class), stragglers rewrite in place
-    val du = spark.sql(s"EXPLAIN UPDATE ${q(t.root)} SET v = v + 1 " +
-      "WHERE k BETWEEN 0 AND 9").head()
-    val ru = spark.sql(s"UPDATE ${q(t.root)} SET v = v + 1 " +
-      "WHERE k BETWEEN 0 AND 9").head()
-    assert(du.getString(0) == "update" && du.getInt(3) == ru.getInt(1) &&
-      du.getInt(4) == ru.getInt(2) && du.getInt(5) == ru.getInt(3),
-      s"got $du vs $ru")
+    // UPDATE: every candidate rewrites (an update has no metadata-only
+    // class), whether the band is spelled BETWEEN or as two comparisons
+    Seq("k BETWEEN 0 AND 9", "k >= 0 AND k <= 9").foreach { where =>
+      val du = spark.sql(s"EXPLAIN UPDATE ${q(t.root)} SET v = v + 1 " +
+        s"WHERE $where").head()
+      val ru = spark.sql(s"UPDATE ${q(t.root)} SET v = v + 1 " +
+        s"WHERE $where").head()
+      assert(du.getString(0) == "update" && du.getInt(3) == ru.getInt(1) &&
+        du.getInt(4) == ru.getInt(2) && du.getInt(5) == ru.getInt(3),
+        s"$where: got $du vs $ru")
+    }
     // predicate DELETE with a residual conjunct: no covered class
     val dd = spark.sql(s"EXPLAIN DELETE FROM ${q(t.root)} " +
       "WHERE k BETWEEN 0 AND 9 AND v % 2 = 0").head()
@@ -1065,6 +1067,15 @@ class SqlTableSpec extends AnyFunSuite with SparkFixture {
       "WHERE k BETWEEN 0 AND 9 AND v % 2 = 0").head()
     assert(dd.getInt(4) == rd.getInt(2) && dd.getInt(5) == rd.getInt(3),
       s"got $dd vs $rd")
+    // MERGE with a NOT MATCHED BY SOURCE clause: the clause band adds
+    // candidates to the key probe's, in the preview as in the run
+    val bsTail = "USING (SELECT CAST(15 AS BIGINT) AS k, CAST(-1 AS BIGINT) AS v) " +
+      "AS s ON t.k = s.k WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED BY SOURCE AND t.k >= 30 THEN DELETE"
+    val db = spark.sql(s"EXPLAIN MERGE INTO ${q(t.root)} AS t $bsTail").head()
+    val rb = spark.sql(s"MERGE INTO ${q(t.root)} AS t $bsTail").head()
+    assert(db.getInt(2) == 2 && db.getInt(4) == rb.getInt(1) &&
+      db.getInt(5) == rb.getInt(2), s"got $db vs $rb")
     // Spark's own EXPLAIN is untouched
     assert(spark.sql("EXPLAIN SELECT 1").collect().nonEmpty)
     // unsupported dry-run forms refuse loudly

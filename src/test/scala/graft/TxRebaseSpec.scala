@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.tables.TxTable
 
 /** File-level conflict detection on copy-on-write commits
-  * ([[graft.tables.TxTable]] commitCow): a merge/delete/compact that
+  * ([[graft.tables.TxTable]] commitCowGuarded): a merge/delete/update/compact that
   * loses the publish race REBASES across concurrent commits proven
   * disjoint (none of the files it read were touched, nothing landed
   * inside its key range) instead of aborting on the version counter —
@@ -156,6 +156,46 @@ class TxRebaseSpec extends AnyFunSuite with SparkFixture {
       .as[Long](spark.implicits.newLongEncoder).collect().sorted.toSeq
     assert(got == ((50L until 100L) ++ (500L until 510L)),
       "victims gone, survivors and the concurrent append intact")
+  }
+
+  test("update rebases across a disjoint concurrent append") {
+    val t = fresh()
+    t.append(spark, keyed(0, 100, 2))
+    val base = t.snapshot()
+    t.append(spark, keyed(500, 510, 1)) // v2: outside the updated band
+    val appended = t.snapshot().files.map(_.path).toSet -- base.files.map(_.path).toSet
+    val res = t.updateWhereFrom(spark, base, "k BETWEEN 0 AND 4", Seq("v" -> "-1"))
+    assert(res.version == 3, s"rebase should publish v3, got ${res.version}")
+    assert(res.rewrittenFiles == 1 && res.keptFiles == 1, s"got $res")
+    assert(appended.subsetOf(t.snapshot().files.map(_.path).toSet),
+      "the disjoint append's file must survive the rebased update by name")
+    import spark.implicits._
+    val got = t.read(spark).select(col("k"), col("v"))
+      .as[(Long, Long)](spark.implicits.newProductEncoder).collect().toMap
+    assert(got.size == 110, "both writers' rows must be present")
+    assert((0L until 5L).forall(got(_) == -1L), "updated rows carry the SET value")
+    assert((5L until 100L).forall(k => got(k) == k * 10))
+    assert((500L until 510L).forall(k => got(k) == k * 10),
+      "concurrent append's rows survive")
+  }
+
+  test("update aborts on a concurrent in-band append; the appended row survives") {
+    // a row landing INSIDE the band between the update's read and its
+    // publish is one the update never saw: rebasing would commit a
+    // table where that row missed the SET — the guard must abort
+    val t = fresh()
+    t.append(spark, keyed(0, 100, 2))
+    import spark.implicits._
+    val base = t.snapshot()
+    t.append(spark, Seq((2L, 999L)).toDF("k", "v")) // v2: inside [0, 4]
+    intercept[java.util.ConcurrentModificationException] {
+      t.updateWhereFrom(spark, base, "k BETWEEN 0 AND 4", Seq("v" -> "-1"))
+    }
+    assert(t.currentVersion == 2, "the aborted update must not publish")
+    val band = t.read(spark).filter(col("k") <= 4).select(col("k"), col("v"))
+      .as[(Long, Long)](spark.implicits.newProductEncoder).collect().toSeq.sorted
+    assert(band == ((0L until 5L).map(k => (k, k * 10)) :+ ((2L, 999L))).sorted,
+      s"the concurrent row survives and nothing was half-updated: $band")
   }
 
   test("compaction rebases across a concurrent append and never drops it") {

@@ -184,6 +184,19 @@ class TxTableSpec extends AnyFunSuite with SparkFixture {
     assert(r2.droppedFiles == 0 && r2.rewrittenFiles == 0 && r2.keptFiles == 7)
   }
 
+  test("a band with negative bounds classifies like any other (covered drops stay metadata-only)") {
+    // the band is the predicate `k BETWEEN lo AND hi` through the DML
+    // pipeline's classifier: negative literals must still yield a band
+    val t = freshTable()
+    t.append(spark, keyed(-200, 200, 4)) // files of 100 keys from -200
+    val r = t.delete(spark, "k", -200, -101)
+    assert(r.droppedFiles == 1 && r.rewrittenFiles == 0 && r.keptFiles == 3, s"got $r")
+    val d = t.dryRun(spark, "delete", TxTable.Selection.Where("k BETWEEN -100 AND -51"))
+    assert(d.pruneClass == "band:k[-100,-51]" && d.straddling == 1 && d.kept == 2,
+      s"got $d")
+    assert(t.read(spark).count() == 300)
+  }
+
   test("delete that loses the race to an overlapping commit aborts instead of clobbering") {
     val t = freshTable()
     t.append(spark, keyed(0, 100, 2))
